@@ -1,83 +1,132 @@
-"""Per-process memo for collected single-row aggregates.
+"""One bounded per-session cache for every cross-query reuse in the engine.
 
-Several operators end in "collect ONE row of aggregates, post-process
-driver-side" (profile, quantiles, outlier fences, distinct counts). When two
-queries need the same aggregate bundle over the same immutable input —
-jb_report after profile, outlier fences after quartiles — the second collect
-is pure repeat work. The memo is keyed by (session, analyzed-plan semantic
-hash, caller tag), so it hits only for semantically identical inputs within
-one process, and assumes batch inputs are immutable for the session — the
-standard batch-analytics contract (same assumption Spark's own cache()
-makes). Bounded FIFO; falls back to plain execution when a plan hash is
-unavailable.
+The reference computes each statistic once, in one pass; this engine adds
+reuse ACROSS queries of one session on top of that. Every such reuse is an
+instance of :class:`SessionCache`, one per kind:
+
+- ``_MEMO`` — collected single-row aggregates keyed by analyzed-plan
+  semantic hash + caller tag (jb_report reuses profile's row, outlier
+  fences reuse the quartiles' percentile pass);
+- ``_EXPR_MEMO`` — built Column expression bundles (metadata only);
+- ``operators/profile._AGG_EXPR_MEMO`` — profile aggregate-slot lists;
+- ``sources/tables._SCHEMA_MEMO`` — parquet footer schemas keyed by the
+  file's (size, mtime);
+- ``operators/dedup._CLUSTER_MEMO`` — checkpointed cluster labels;
+- ``operators/similarity._MODEL_MEMO`` — trained ANN centroids/codebooks;
+- ``operators/dedup._PERSISTED_NARROW`` — the last-K persisted frames,
+  unpersisted on eviction.
+
+Entries are keyed by (id(owner), key) and guarded by a weak reference to
+the owner (a SparkSession or SparkContext), so a new session landing at a
+recycled address never sees another session's entries. Batch inputs are
+assumed immutable for the session — the contract Spark's own cache()
+makes. Each cache is bounded FIFO; a hit never reorders it.
 """
 
 from __future__ import annotations
 
+import threading
 import weakref
 
 from pyspark.sql import Column, DataFrame
 
-# key -> (session weakref, collected row). The weakref guards against id()
-# reuse: if the original session was torn down and a NEW session object
-# happens to land at the same address, the dead/mismatched ref invalidates
-# the entry instead of serving another session's (stale) aggregates.
-_MEMO: dict[tuple, tuple] = {}
-_MEMO_MAX = 128
+_CACHES: list[SessionCache] = []
+
+
+def _copy(value):
+    return list(value) if isinstance(value, list) else value
+
+
+class SessionCache(dict):
+    """Bounded, insertion-ordered ``(id(owner), key) -> (weakref(owner),
+    value)`` store. The lock guards lookup, insert and evict only, never
+    ``build()`` — a build can be a multi-second Spark job run from
+    ``run_concurrently`` threads, and two threads building the same key
+    just both build. ``on_evict(value)`` runs for every entry dropped by
+    FIFO eviction or :meth:`clear`. List values are shallow-copied on
+    return so callers may extend them without touching the cached one."""
+
+    def __init__(self, max: int, on_evict=None):
+        super().__init__()
+        self.max = max
+        self.on_evict = on_evict
+        self._lock = threading.Lock()
+        _CACHES.append(self)
+
+    def lookup(self, owner, key):
+        """The cached value for (owner, key), or None."""
+        with self._lock:
+            hit = dict.get(self, (id(owner), key))
+        if hit is None or hit[0]() is not owner:
+            return None
+        return _copy(hit[1])
+
+    def put(self, owner, key, value) -> None:
+        k = (id(owner), key)
+        with self._lock:
+            dropped = [self.pop(k, None)]
+            while len(self) >= self.max:
+                dropped.append(self.pop(next(iter(self)), None))
+            self[k] = (weakref.ref(owner), value)
+        self._release(dropped)
+
+    def get_or_build(self, owner, key, build):
+        """lookup(), else build() and put(); an owner or key of None
+        bypasses the cache."""
+        if owner is None or key is None:
+            return build()
+        hit = self.lookup(owner, key)
+        if hit is not None:
+            return hit
+        value = build()
+        self.put(owner, key, value)
+        return _copy(value)
+
+    def clear(self) -> None:
+        with self._lock:
+            dropped = list(self.values())
+            super().clear()
+        self._release(dropped)
+
+    def _release(self, entries: list) -> None:
+        if self.on_evict is None:
+            return
+        for entry in entries:
+            if entry is not None:
+                try:
+                    self.on_evict(entry[1])
+                except Exception:
+                    pass    # session already stopped; nothing to release
 
 
 def clear_all_memos() -> None:
-    """Drop every per-process memo (stats rows here, cluster labels in
-    operators/dedup). Bench hygiene: a repeat timed pass must measure
-    execution, not the previous pass's memo hits. Cluster-label entries
-    are localCheckpoint-materialized DataFrames — unpersist their cached
-    blocks instead of leaving them to nondeterministic JVM GC."""
-    _MEMO.clear()
-    _EXPR_MEMO.clear()
-    from flink_descriptive_stats_spark.operators import dedup
-    for ref, df in dedup._CLUSTER_MEMO.values():
-        try:
-            if ref() is not None:
-                df.unpersist()
-        except Exception:
-            pass            # session already stopped; blocks died with it
-    dedup._CLUSTER_MEMO.clear()
-    from flink_descriptive_stats_spark.operators import similarity
-    similarity._MODEL_MEMO.clear()
-    from flink_descriptive_stats_spark.sources import tables
-    tables._SCHEMA_MEMO.clear()
-    from flink_descriptive_stats_spark.operators import profile
-    profile._AGG_EXPR_MEMO.clear()
+    """Drop every SessionCache entry, running each kind's on_evict hook
+    (persisted frames unpersist). Bench hygiene: a repeat timed pass must
+    measure execution, not the previous pass's memo hits or cached
+    blocks."""
+    for cache in _CACHES:
+        cache.clear()
 
 
-#: session-keyed memo for BUILT Column expression bundles — metadata
-#: only (unresolved, immutable expression trees reusable across any
-#: DataFrame), never data. Building a big bundle costs hundreds of py4j
-#: round trips (text_stats_exprs measured 0.65s per build), re-paid by
-#: every query composing it; the memo pays it once per session+pass.
-_EXPR_MEMO: dict = {}
-_EXPR_MEMO_MAX = 512
+_MEMO = SessionCache(128)
+_EXPR_MEMO = SessionCache(512)
+
+
+def plan_key(df: DataFrame, tag: tuple):
+    """(analyzed-plan semantic hash, tag), or None when the hash is
+    unavailable (the caller then runs uncached)."""
+    try:
+        return df._jdf.queryExecution().analyzed().semanticHash(), tag
+    except Exception:
+        return None
 
 
 def exprs_memoized(tag: tuple, build):
     """Return build(), memoized per (active SparkContext, tag). Lists are
     shallow-copied on return so callers may extend them safely."""
-    import weakref
-
     from pyspark import SparkContext
-    sc = SparkContext._active_spark_context
-    if sc is None:
-        return build()
-    key = (id(sc), tag)
-    hit = _EXPR_MEMO.get(key)
-    if hit is not None and hit[0]() is sc:
-        out = hit[1]
-        return list(out) if isinstance(out, list) else out
-    out = build()
-    if len(_EXPR_MEMO) >= _EXPR_MEMO_MAX:
-        _EXPR_MEMO.pop(next(iter(_EXPR_MEMO)))
-    _EXPR_MEMO[key] = (weakref.ref(sc), out)
-    return list(out) if isinstance(out, list) else out
+    return _EXPR_MEMO.get_or_build(
+        SparkContext._active_spark_context, tag, build)
 
 
 def agg_row_memoized(df: DataFrame, agg_exprs: list[Column], tag: tuple):
@@ -85,23 +134,8 @@ def agg_row_memoized(df: DataFrame, agg_exprs: list[Column], tag: tuple):
 
     ``tag`` must uniquely identify the aggregate bundle shape (caller name +
     column list + parameters) — the plan hash covers only the INPUT."""
-    sess = df.sparkSession
-    try:
-        h = df._jdf.queryExecution().analyzed().semanticHash()
-        key = (id(sess), h, tag)
-    except Exception:
-        key = None
-    if key is not None and key in _MEMO:
-        ref, row = _MEMO[key]
-        if ref() is sess:
-            return row
-        del _MEMO[key]          # dead or different session at this address
-    row = df.agg(*agg_exprs).collect()[0]
-    if key is not None:
-        if len(_MEMO) >= _MEMO_MAX:
-            _MEMO.pop(next(iter(_MEMO)))
-        _MEMO[key] = (weakref.ref(sess), row)
-    return row
+    return _MEMO.get_or_build(df.sparkSession, plan_key(df, tag),
+                              lambda: df.agg(*agg_exprs).collect()[0])
 
 
 def agg_row_peek(df: DataFrame, tag: tuple):
@@ -110,12 +144,5 @@ def agg_row_peek(df: DataFrame, tag: tuple):
     another operator already paid for it, but should run their own lean
     aggregate otherwise (e.g. schema_suggestions reading the profile's
     counters only when profile() already ran on this exact input)."""
-    sess = df.sparkSession
-    try:
-        h = df._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:
-        return None
-    hit = _MEMO.get((id(sess), h, tag))
-    if hit is not None and hit[0]() is sess:
-        return hit[1]
-    return None
+    key = plan_key(df, tag)
+    return None if key is None else _MEMO.lookup(df.sparkSession, key)

@@ -32,19 +32,27 @@ MAX_IN_FLIGHT = 8
 
 def _inheritable(thunk: Callable[[], T]) -> Callable[[], T]:
     """Wrap the thunk so the worker thread inherits the caller's JVM
-    thread-local properties (job group, job description). Under PySpark's
-    pinned-thread mode a plain pool thread carries NO job group, so jobs
-    submitted here were attributed to no query in the event log — exactly
-    the concurrent queries the profiler was built to measure (r13 ADVICE).
-    Falls back to the raw thunk when no SparkContext is active (the wrap
-    captures properties from the active context at submit time)."""
+    thread-local properties (job group, job description) and session
+    tags. Under PySpark's pinned-thread mode a plain pool thread carries
+    NO job group, so jobs submitted here were attributed to no query in
+    the event log — exactly the concurrent queries the profiler was built
+    to measure (r13 ADVICE). The wrap captures them at submit time from
+    the caller's active (else default) session — a nested call from a
+    pool thread has no thread-active session. With no session at all it
+    falls back to the bare-callable form (properties only), and with no
+    SparkContext to the raw thunk."""
     try:
         from pyspark import SparkContext, inheritable_thread_target
-        if SparkContext._active_spark_context is not None:
+        from pyspark.sql import SparkSession
+        if SparkContext._active_spark_context is None:
+            return thunk
+        try:
+            sess = SparkSession.active()
+        except Exception:               # no active or default session
             return inheritable_thread_target(thunk)
+        return inheritable_thread_target(sess)(thunk)
     except Exception:
-        pass
-    return thunk
+        return thunk
 
 
 def run_concurrently(thunks: Sequence[Callable[[], T]]) -> list[T]:

@@ -45,10 +45,6 @@ def is_numeric_type(dt: T.DataType) -> bool:
     return isinstance(dt, _NUMERIC_TYPES)
 
 
-def is_temporal_type(dt: T.DataType) -> bool:
-    return isinstance(dt, (T.DateType, T.TimestampType, T.TimestampNTZType))
-
-
 def numeric_expr(name: str, dt: T.DataType) -> Column | None:
     """F1: widen a column to DOUBLE for moment statistics.
 

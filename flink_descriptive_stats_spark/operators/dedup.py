@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from flink_descriptive_stats_spark.functions import hashing as H
+from flink_descriptive_stats_spark.functions.memo import SessionCache, plan_key
 
 
 def exact_dedup(df: DataFrame, content_col: str = "text",
@@ -796,29 +797,10 @@ def embedding_near_dup_pairs_lsh(df: DataFrame, id_col: str = "vec_id",
     return _exact_cos_recheck(d, cand, threshold)
 
 
-# bounded per-process memo of cluster-label DataFrames (see
-# neardup_clusters); values are localCheckpoint-materialized so reuse is a
-# read of cached blocks, not a recomputation. Entries carry a session
-# weakref so id()-address reuse by a NEW session can't serve stale labels.
-_CLUSTER_MEMO: dict[tuple, tuple] = {}
-
-
-def _cluster_memo_put(key: tuple, sess, out: DataFrame) -> None:
-    import weakref
-    if len(_CLUSTER_MEMO) >= 32:
-        _CLUSTER_MEMO.pop(next(iter(_CLUSTER_MEMO)))
-    _CLUSTER_MEMO[key] = (weakref.ref(sess), out)
-
-
-def _cluster_memo_get(key: tuple, sess) -> DataFrame | None:
-    hit = _CLUSTER_MEMO.get(key)
-    if hit is None:
-        return None
-    ref, out = hit
-    if ref() is sess:
-        return out
-    del _CLUSTER_MEMO[key]
-    return None
+# bounded memo of cluster-label DataFrames (see neardup_clusters); values
+# are localCheckpoint-materialized so reuse is a read of cached blocks,
+# not a recomputation.
+_CLUSTER_MEMO = SessionCache(32, on_evict=lambda df: df.unpersist())
 
 
 def _edge_signature(edges: DataFrame) -> tuple:
@@ -921,16 +903,10 @@ def neardup_clusters(df: DataFrame, content_col: str = "text",
     # repeat clustering of the same input (dedup_corpus after
     # neardup_clusters, multiple consumers in one pipeline) returns the
     # already-computed labels instead of re-running pair generation + CC
-    try:
-        key = (id(df.sparkSession),
-               df._jdf.queryExecution().analyzed().semanticHash(),
-               (content_col, id_col, n, threshold, method))
-    except Exception:
-        key = None
-    if key is not None:
-        hit = _cluster_memo_get(key, df.sparkSession)
-        if hit is not None:
-            return hit
+    key = plan_key(df, (content_col, id_col, n, threshold, method))
+    hit = None if key is None else _CLUSTER_MEMO.lookup(df.sparkSession, key)
+    if hit is not None:
+        return hit
 
     pairs = minhash_dedup_pairs(df, content_col, id_col, n, threshold)
     if method == "star":
@@ -940,7 +916,7 @@ def neardup_clusters(df: DataFrame, content_col: str = "text",
             pairs.select(F.col("id_a").alias("u"),
                          F.col("id_b").alias("v")), nodes).localCheckpoint()
         if key is not None:
-            _cluster_memo_put(key, df.sparkSession, out)
+            _CLUSTER_MEMO.put(df.sparkSession, key, out)
         return out
     edges = (pairs.select(F.col("id_a").alias("s"), F.col("id_b").alias("t"))
              .union(pairs.select(F.col("id_b").alias("s"),
@@ -966,7 +942,7 @@ def neardup_clusters(df: DataFrame, content_col: str = "text",
             break
     out = labels.select("id", F.col("comp").alias("cluster_id"))
     if key is not None:
-        _cluster_memo_put(key, df.sparkSession, out)
+        _CLUSTER_MEMO.put(df.sparkSession, key, out)
     return out
 
 
@@ -1652,8 +1628,9 @@ def remove_repeated_spans(df: DataFrame, text_col: str = "text",
 #: but ~11s late in a bench that had leaked every prior persist.
 #: Evicting beyond K is always SAFE: an evicted frame that a still-lazy
 #: result later references simply recomputes (the pre-persist plan).
-_PERSISTED_NARROW: list = []
 _PERSISTED_NARROW_KEEP = 8
+_PERSISTED_NARROW = SessionCache(
+    _PERSISTED_NARROW_KEEP, on_evict=lambda df: df.unpersist(blocking=False))
 
 
 def _persist_pos(pos: DataFrame) -> DataFrame:
@@ -1678,13 +1655,7 @@ def _persist_pos(pos: DataFrame) -> DataFrame:
     cannot starve storage — the measured failure mode above."""
     from pyspark.storagelevel import StorageLevel
     out = pos.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED_NARROW.append(out)
-    while len(_PERSISTED_NARROW) > _PERSISTED_NARROW_KEEP:
-        old = _PERSISTED_NARROW.pop(0)
-        try:
-            old.unpersist(blocking=False)
-        except Exception:
-            pass  # session already stopped; nothing to release
+    _PERSISTED_NARROW.put(out.sparkSession, id(out), out)
     return out
 
 

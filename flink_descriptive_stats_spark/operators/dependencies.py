@@ -202,6 +202,17 @@ def _suffix(name: str) -> str:
     return name.split("_", 1)[-1]
 
 
+def _ident(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _col(name: str):
+    """F.col for a raw column name, even one containing a backtick or
+    a dot."""
+    return F.col(_ident(name))
+
+
 def fk_discover(tables: dict[str, DataFrame],
                 min_containment: float = 1.0,
                 approx: bool = False,
@@ -289,10 +300,10 @@ def fk_discover(tables: dict[str, DataFrame],
             continue
         aggs = [F.count(F.lit(1)).alias("__n")]
         for c in cols:
-            aggs += [F.count(F.col(c)).alias(f"{c}__nn"),
-                     distinct_of(F.col(c)).alias(f"{c}__d"),
-                     F.min(F.col(c)).cast("bigint").alias(f"{c}__mn"),
-                     F.max(F.col(c)).cast("bigint").alias(f"{c}__mx")]
+            aggs += [F.count(_col(c)).alias(f"{c}__nn"),
+                     distinct_of(_col(c)).alias(f"{c}__d"),
+                     F.min(_col(c)).cast("bigint").alias(f"{c}__mn"),
+                     F.max(_col(c)).cast("bigint").alias(f"{c}__mx")]
         stat_tables.append((tname, cols, df.agg(*aggs)))
     rows = run_concurrently(
         [lambda a=agg: a.collect()[0] for _, _, agg in stat_tables])
@@ -366,10 +377,10 @@ def _containment_union(spark, tables: dict[str, DataFrame],
         args[tkey[ct]] = tables[ct]
         args[tkey[pt]] = tables[pt]
         ks = [f"__k{j}" for j in range(len(cpair))]
-        csel = ", ".join(f"`{c}` AS {k}" for c, k in zip(cpair, ks))
-        cnn = " AND ".join(f"`{c}` IS NOT NULL" for c in cpair)
-        psel = ", ".join(f"`{p}` AS {k}" for p, k in zip(ppair, ks))
-        pnn = " AND ".join(f"`{p}` IS NOT NULL" for p in ppair)
+        csel = ", ".join(f"{_ident(c)} AS {k}" for c, k in zip(cpair, ks))
+        cnn = " AND ".join(f"{_ident(c)} IS NOT NULL" for c in cpair)
+        psel = ", ".join(f"{_ident(p)} AS {k}" for p, k in zip(ppair, ks))
+        pnn = " AND ".join(f"{_ident(p)} IS NOT NULL" for p in ppair)
         branches.append(
             f"SELECT '{esc(ct)}' AS child_table, "
             f"'{esc(','.join(cpair))}' AS child_col, "
@@ -430,17 +441,17 @@ def _composite_pairs(tables: dict[str, DataFrame],
         df = tables[tname]
         aggs = [F.count(F.lit(1)).alias("__n")]
         for i, (a, b) in enumerate(pairs):
-            nn = F.count(F.when(F.col(a).isNotNull()
-                                & F.col(b).isNotNull(), 1))
+            nn = F.count(F.when(_col(a).isNotNull()
+                                & _col(b).isNotNull(), 1))
             # any-NULL-component pairs are no key value: mask them
             # BEFORE hashing (xxhash64 would otherwise hash the null
             # row to a real value and inflate the pair count — exact
             # count_distinct(a, b) skips such rows natively)
             d = (F.approx_count_distinct(
-                     F.when(F.col(a).isNotNull() & F.col(b).isNotNull(),
-                            F.xxhash64(F.col(a), F.col(b))),
+                     F.when(_col(a).isNotNull() & _col(b).isNotNull(),
+                            F.xxhash64(_col(a), _col(b))),
                      APPROX_RSD)
-                 if approx else F.count_distinct(F.col(a), F.col(b)))
+                 if approx else F.count_distinct(_col(a), _col(b)))
             aggs += [nn.alias(f"p{i}__nn"), d.alias(f"p{i}__d")]
         pair_aggs.append((tname, pairs, df.agg(*aggs)))
     # independent per-table aggregates: overlap them (guide §2.6), fold

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_descriptive_stats_spark.functions import scalar
+from flink_descriptive_stats_spark.functions.memo import SessionCache
 from flink_descriptive_stats_spark.functions.sig import sig6_py
 from flink_descriptive_stats_spark.operators import moments
 
@@ -63,32 +64,19 @@ def completeness_expr(df: DataFrame) -> Column:
 
 
 #: per-session memo of the built aggregate-slot Column lists, keyed by
-#: (session weakref-guarded id, position, column name, dtype). Columns are
-#: immutable unresolved expression trees reusable across DataFrames, but
-#: BUILDING one is 1-2 py4j round trips — the ~200-expression lineitem
-#: bundle costs ~0.7s of pure driver time, rebuilt by every
-#: profile-family query over the same schema. Metadata-only memo
-#: (expressions, never data); cleared by clear_all_memos.
-_AGG_EXPR_MEMO: dict = {}
-_AGG_EXPR_MEMO_MAX = 512
+#: (position, column name, dtype). Columns are immutable unresolved
+#: expression trees reusable across DataFrames, but BUILDING one is 1-2
+#: py4j round trips — the ~200-expression lineitem bundle costs ~0.7s of
+#: pure driver time, rebuilt by every profile-family query over the same
+#: schema. Metadata-only (expressions, never data).
+_AGG_EXPR_MEMO = SessionCache(512)
 
 
 def _agg_exprs_for_column(i: int, name: str, dt: T.DataType) -> list[Column]:
-    import weakref
-
     from pyspark import SparkContext
-    sc = SparkContext._active_spark_context
-    key = (id(sc), i, name, dt.simpleString()) if sc is not None else None
-    if key is not None:
-        hit = _AGG_EXPR_MEMO.get(key)
-        if hit is not None and hit[0]() is sc:
-            return hit[1]
-    exprs = _build_agg_exprs_for_column(i, name, dt)
-    if key is not None:
-        if len(_AGG_EXPR_MEMO) >= _AGG_EXPR_MEMO_MAX:
-            _AGG_EXPR_MEMO.pop(next(iter(_AGG_EXPR_MEMO)))
-        _AGG_EXPR_MEMO[key] = (weakref.ref(sc), exprs)
-    return exprs
+    return _AGG_EXPR_MEMO.get_or_build(
+        SparkContext._active_spark_context, (i, name, dt.simpleString()),
+        lambda: _build_agg_exprs_for_column(i, name, dt))
 
 
 def _build_agg_exprs_for_column(i: int, name: str,

@@ -1416,11 +1416,8 @@ def curate_corpus(df: DataFrame, holdout: DataFrame,
             decontaminate_by_url
         dec = decontaminate_by_url(dec, holdout, url_col=url_col)
     if despan_min_df is not None:
-        from flink_descriptive_stats_spark.operators.dedup import (
-            _persist_pos, remove_repeated_spans)
-        import os as _os
-        if _os.environ.get("SPARK_GRAFT_CURATE_PERSIST"):
-            dec = _persist_pos(dec)
+        from flink_descriptive_stats_spark.operators.dedup import \
+            remove_repeated_spans
         sp = remove_repeated_spans(dec, text_col=text_col,
                                    id_col=id_col,
                                    min_ngram=despan_min_ngram,

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from flink_descriptive_stats_spark.functions.fsio import (
     get_fs, read_text_recovering, warn_non_atomic)
+from flink_descriptive_stats_spark.functions.memo import SessionCache, plan_key
 
 
 def with_norm(df: DataFrame, id_col: str = "vec_id",
@@ -52,15 +53,6 @@ def with_norm(df: DataFrame, id_col: str = "vec_id",
     return (df.select(F.col(id_col).alias("id"), v.alias("v"),
                       F.sqrt(dot_self).alias("norm"))
             .where(F.col("norm") > 0))
-
-
-def cosine_expr(a: str, b: str):
-    """cos(a.v, b.v) given two with_norm aliases — index-order left-fold dot
-    product, so the result is bit-identical across engines."""
-    dot = F.aggregate(
-        F.zip_with(F.col(f"{a}.v"), F.col(f"{b}.v"), lambda x, y: x * y),
-        F.lit(0.0), lambda acc, z: acc + z)
-    return dot / (F.col(f"{a}.norm") * F.col(f"{b}.norm"))
 
 
 def brute_force_topk(df: DataFrame, query_ids: list[int] | None = None,
@@ -173,12 +165,6 @@ def lsh_bucket_sql(vec_sql: str, planes: list[list[float]]) -> str:
     return f"({terms})"
 
 
-def lsh_bucket_expr(vec_sql: str, planes: list[list[float]]) -> F.Column:
-    """Column view of ``lsh_bucket_sql`` (``vec_sql`` is the vector
-    column's SQL name/expression, e.g. ``"v"``)."""
-    return F.expr(lsh_bucket_sql(vec_sql, planes))
-
-
 def embedding_dim_profile(df: DataFrame, id_col: str = "vec_id",
                           vec_col: str = "embedding") -> DataFrame:
     """Per-dimension statistics of an embedding column — the drift-detection
@@ -278,33 +264,17 @@ def lsh_topk(df: DataFrame, k: int = 5, n_tables: int = 8,
 
 
 # Trained-model memo (bounded metadata: centroid rows / codebook arrays),
-# same contract as functions/memo.agg_row_memoized — keyed by (session id,
-# analyzed-plan semantic hash, params) with a weakref session guard, FIFO
-# bounded, cleared by memo.clear_all_memos. ann_ivf_kmeans / ann_pq /
-# ann_ivf_pq train on identical (input, params) pairs, so within one
-# process the Lloyd/PQ training runs ONCE and the searches share it —
-# retraining per query was pure repeat work (training is deterministic).
-_MODEL_MEMO: dict[tuple, tuple] = {}
+# keyed by (analyzed-plan semantic hash, params) like
+# functions/memo.agg_row_memoized. ann_ivf_kmeans / ann_pq / ann_ivf_pq
+# train on identical (input, params) pairs, so within one process the
+# Lloyd/PQ training runs ONCE and the searches share it — retraining per
+# query was pure repeat work (training is deterministic).
+_MODEL_MEMO = SessionCache(64)
 
 
 def _model_memoized(df: DataFrame, params: tuple, build):
-    import weakref
-    sess = df.sparkSession
-    try:
-        h = df._jdf.queryExecution().analyzed().semanticHash()
-        key = (id(sess), h, params)
-    except Exception:
-        key = None
-    if key is not None:
-        hit = _MODEL_MEMO.get(key)
-        if hit is not None and hit[0]() is sess:
-            return hit[1]
-    out = build()
-    if key is not None:
-        if len(_MODEL_MEMO) >= 64:
-            _MODEL_MEMO.pop(next(iter(_MODEL_MEMO)))
-        _MODEL_MEMO[key] = (weakref.ref(sess), out)
-    return out
+    return _MODEL_MEMO.get_or_build(df.sparkSession,
+                                    plan_key(df, params), build)
 
 
 def kmeans_centroid_rows(df: DataFrame, n_cells: int = 16, iters: int = 2,

@@ -71,18 +71,6 @@ def topk_tokens(df: DataFrame, columns: list[str] | None = None,
     return _rank_topk(counts, ["kind", "column"], k)
 
 
-def topk_as_maps(df: DataFrame, columns: list[str] | None = None,
-                 k: int = 20) -> DataFrame:
-    """A15: fold each column's top-K into a single map row —
-    (kind, column, top: map<token, cnt>). The fold runs over <= K rows per
-    group, mirroring the reference's ReduceTopStrings/ReduceTopPatterns
-    (ProfileJob.java:218-248) without its fake global group."""
-    top = topk_tokens(df, columns, k)
-    return (top.groupBy("kind", "column")
-            .agg(F.map_from_entries(
-                F.collect_list(F.struct("token", "cnt"))).alias("top")))
-
-
 def _rank_topk(counts: DataFrame, partition_cols: list[str],
                k: int) -> DataFrame:
     """The shared top-K funnel: deterministic (cnt desc, token asc) ties,

@@ -217,18 +217,6 @@ def grouped_profile(df: DataFrame, keys: list[str],
                            for s in WINDOW_STATS])
 
 
-def streaming_windowed_profile(spark, source_dir: str, schema,
-                               ts_col: str = "ts", value_col: str = "value",
-                               window: str = "6 hours",
-                               watermark: str = "1 hour",
-                               **kwargs) -> DataFrame:
-    """readStream(parquet dir) -> windowed profile. Caller attaches the sink
-    (writeStream / foreachBatch)."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    return windowed_profile(stream, ts_col=ts_col, value_col=value_col,
-                            window=window, watermark=watermark, **kwargs)
-
-
 def windowed_distinct(df: DataFrame, ts_col: str = "ts",
                       key_col: str = "user_id",
                       window: str = "1 day",

@@ -89,6 +89,19 @@ def test_fk_discover_finds_true_fk_and_prunes(spark):
     assert r["name_affinity"] is True  # suffix 'key' == 'key'
 
 
+def test_fk_discover_backtick_column_names(spark):
+    """Identifiers are backtick-escaped in the containment SQL: a child
+    and a parent column both named a`b still yield their FK row."""
+    from flink_descriptive_stats_spark.operators import dependencies as DP
+    dim = spark.createDataFrame([(0,), (1,), (2,)], "`a``b` int")
+    fact = spark.createDataFrame([(0,), (1,), (1,), (2,)], "`a``b` int")
+    out = DP.fk_discover({"fact": fact, "dim": dim}).collect()
+    found = {(r["child_table"], r["child_col"],
+              r["parent_table"], r["parent_col"]): r for r in out}
+    r = found[("fact", "a`b", "dim", "a`b")]
+    assert r["n_child_distinct"] == 3 and r["n_orphans"] == 0
+
+
 def test_fk_discover_min_containment_threshold(spark):
     from flink_descriptive_stats_spark.operators import dependencies as DP
     dim = spark.createDataFrame([(0,), (1,), (2,), (3,)], "d_key int")
